@@ -310,9 +310,9 @@ def main() -> None:
     # Cross-round comparability after a window rotation (VERDICT r6 item
     # 4): subtotal THIS run's timings over the queries shared with the
     # PREVIOUS round's recorded bench (highest-numbered BENCH_r*.json on
-    # disk), so round-over-round deltas compare identical work even when
-    # the headline window changes.
-    shared = _shared_with_prev(timings)
+    # disk made on this run's core count), so round-over-round deltas
+    # compare identical work even when the headline window changes.
+    shared = _shared_with_prev(timings, spark.sparkContext.defaultParallelism)
     if shared is not None:
         compact["shared_with_prev_window_seconds"] = shared["seconds"]
         compact["shared_with_prev_window_n"] = shared["n"]
@@ -408,25 +408,34 @@ def _ratio_vs_committed(
     }
 
 
-def _shared_with_prev(timings: dict[str, float]) -> dict | None:
+def _shared_with_prev(
+    timings: dict[str, float], cpus: int, root: str = _HERE
+) -> dict | None:
     """Subtotal of `timings` restricted to the query names present in the
-    most recent driver-recorded BENCH_r*.json (its full per-query map if
-    readable via its full_results_file, else its headline map). None when
-    no prior round artifact exists."""
+    highest-numbered driver-recorded BENCH_r<N>*.json whose `cpus` equals
+    this run's cores (its headline map). None when no such artifact
+    exists. Names sort lexically (BENCH_r11_c8.json after BENCH_r11.json),
+    so the round number and the recorded core count pick the file, not
+    the name's order."""
     import glob
 
-    prior = sorted(glob.glob(os.path.join(_HERE, "BENCH_r*.json")))
-    if not prior:
+    best: tuple[int, str, dict] | None = None
+    for path in glob.glob(os.path.join(root, "BENCH_r*.json")):
+        m = re.match(r"BENCH_r(\d+)", os.path.basename(path))
+        try:
+            with open(path) as f:
+                prev = json.load(f)
+        except (json.JSONDecodeError, OSError):
+            continue
+        if m and prev.get("cpus") == cpus and (best is None or int(m[1]) > best[0]):
+            best = (int(m[1]), path, prev)
+    if best is None:
         return None
-    path = prior[-1]
-    try:
-        prev = json.load(open(path))
-        # The driver wraps bench.py's stdout line under "parsed".
-        if "parsed" in prev and isinstance(prev["parsed"], dict):
-            prev = prev["parsed"]
-        prev_names = set(prev.get("queries") or {})
-    except (json.JSONDecodeError, OSError):
-        return None
+    _round, path, prev = best
+    # The driver wraps bench.py's stdout line under "parsed".
+    if "parsed" in prev and isinstance(prev["parsed"], dict):
+        prev = prev["parsed"]
+    prev_names = set(prev.get("queries") or {})
     if not prev_names:
         return None
     both = prev_names & set(timings)

@@ -10,15 +10,19 @@ an explicit tie-break ordering (SURVEY.md §7 Hard-1).
 
 Scale extensions (no reference counterpart; BASELINE.json:6): MinHash-LSH /
 SimHash / n-gram-Jaccard near-dup for a 100 TB document corpus. All are
-pure-DataFrame compositions — no MLlib dependency, no Python in the shuffle
-path. MinHash signatures are MAP-ONLY (array_min over per-row shingle
-hashes; a per-doc min needs no shuffle). SimHash's 60-bit majority vote
-deliberately KEEPS the explode + two hash aggregations: the same vote as a
-nested higher-order aggregate is shuffle-free but evaluates interpreted
-(measured 13 s vs 1.4 s at sf0.1) — whole-stage-codegen'd hash aggregates
-beat interpreted HOFs when the per-row expansion is large. The production
-SimHash uses one Arrow-vectorized pandas UDF for the same inner loop
-(numpy bit ops), a narrow per-row map with no shuffle.
+pure-DataFrame compositions — no MLlib dependency, no Python UDF anywhere in
+the MinHash/SimHash path. Each algorithm has ONE pipeline, and
+`hash="xxhash64" | "md5"` picks its hash family: xxhash64 is the production
+hash; md5 is the engine-portable family that a DuckDB oracle reproduces bit
+for bit, so the oracled md5 twins cover the same lines the production tiers
+run. The family changes only the hash expression (and, for SimHash, the bit
+width: 64 bits in 16-bit blocks vs md5's 60-bit prefix in 15-bit blocks).
+MinHash signatures are MAP-ONLY (array_min over per-row shingle hashes; a
+per-doc min needs no shuffle). SimHash's majority vote deliberately KEEPS
+the explode + two hash aggregations: the same vote as a nested higher-order
+aggregate is shuffle-free but evaluates interpreted (measured 13 s vs 1.4 s
+at sf0.1) — whole-stage-codegen'd hash aggregates beat interpreted HOFs
+when the per-row expansion is large.
 
 Scale notes:
 - MinHash bands join is an equi-join on (band_id, band_hash) — shuffle keys
@@ -34,7 +38,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from crz_scraper_spark.functions.text import tokens_nonempty
 
@@ -134,72 +137,104 @@ def char_shingles(text: Column | str, n: int = 5) -> Column:
     return F.array_distinct(F.transform(idx, lambda i: F.substring(t, i, n)))
 
 
+HASH_FAMILIES = ("xxhash64", "md5")
+MINHASH_PRIME = (1 << 31) - 1  # Mersenne prime for the Carter-Wegman family
+SIMHASH_MD5_BITS = 60  # fits the signed-bigint-safe 15-hex-char md5 hash
+# (bits, block bits) per SimHash token-hash family: four blocks each, so a
+# pair within Hamming <= 3 agrees on at least one block (pigeonhole).
+_SIMHASH_SHAPE = {"xxhash64": (64, 16), "md5": (SIMHASH_MD5_BITS, 15)}
+
+
+def _check_hash(hash: str) -> None:
+    """A typo must not silently run the other family."""
+    if hash not in HASH_FAMILIES:
+        raise ValueError(f"hash must be one of {HASH_FAMILIES}, got {hash!r}")
+
+
+def _minhash_coeffs(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
+    """Fixed (a_i, c_i) pairs for h_i(x) = (a_i*x + c_i) mod p, generated by
+    a tiny deterministic LCG so BOTH the Spark plan and the SQL oracle embed
+    the identical literals. a_i ∈ [1, p), c_i ∈ [0, p); with x < 2^32 and
+    a_i < 2^31, a_i*x + c_i < 2^63 — exact in signed-64 on every engine."""
+    state = seed
+    out = []
+    for _ in range(num_hashes):
+        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
+        a = state % (MINHASH_PRIME - 1) + 1
+        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
+        c = state % MINHASH_PRIME
+        out.append((a, c))
+    return out
+
+
+def _md5_hash64(col: Column) -> Column:
+    """Engine-portable 60-bit hash: first 15 hex chars of md5 as a bigint.
+    A DuckDB oracle reproduces it exactly with
+    `('0x' || substr(md5(x),1,15))::BIGINT`."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
+
+
 def minhash_signatures(
-    docs: DataFrame, id_col: str, text_col: str, num_hashes: int = 32, shingle_n: int = 5
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int = 32,
+    shingle_n: int = 5,
+    hash: str = "xxhash64",
 ) -> DataFrame:
     """(id, sig: array<bigint>[num_hashes]) MinHash signature per document.
 
-    Implementation: `array_min(transform(shingles, s -> xxhash64(s, seed_i)))`
-    per seed, over the per-row shingle array — the signature build is
-    MAP-ONLY (the earlier explode + groupBy-min formulation shuffled every
+    Implementation: `array_min(transform(shingles, s -> h_i(s)))` per seed
+    i, over the per-row shingle array — the signature build is MAP-ONLY
+    (the earlier explode + groupBy-min formulation shuffled every
     (doc, shingle) row; a per-doc min never needs a shuffle because all of
-    a doc's shingles already live in its own row). All hashing is the
-    JVM's xxhash64 — deterministic across runs/partitions.
+    a doc's shingles already live in its own row).
+
+    `hash` picks the family; only the per-seed hash expression changes:
+    - "xxhash64" (production): h_i(s) = xxhash64(s, i).
+    - "md5" (engine-portable, reproducible in DuckDB): ONE md5 per shingle
+      yields a 32-bit base x (hex chars 1-8), and h_i = (a_i*x + c_i) mod p
+      with p = 2^31-1 and fixed per-seed coefficients (Carter-Wegman).
+      The multiply wraps the modulus many times (unlike an additive
+      family, whose components correlate and inflate the Jaccard
+      estimate), every step is exact in signed-64 on both engines, and
+      the corpus pass runs one digest per shingle instead of num_hashes
+      (measured 14.3 s → ~2 s at sf0.1).
     """
+    _check_hash(hash)
+    elems = docs.select(
+        F.col(id_col), char_shingles(text_col, shingle_n).alias("__shs")
+    )
+    if hash == "md5":
+        # Each shingle is replaced by its md5 base x; the seeds hash x.
+        elems = elems.select(
+            F.col(id_col),
+            F.transform(
+                F.col("__shs"),
+                lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast(
+                    "bigint"
+                ),
+            ).alias("__shs"),
+        )
+        coeffs = _minhash_coeffs(num_hashes)
+
+        def seeded(x: Column, i: int) -> Column:
+            a, c = coeffs[i]
+            return (F.lit(a) * x + F.lit(c)) % F.lit(MINHASH_PRIME)
+
+    else:
+
+        def seeded(s: Column, i: int) -> Column:
+            return F.xxhash64(s, F.lit(i))
 
     def _seed_min(i: int) -> Column:
         # One-parameter lambda required: transform() treats a two-parameter
         # lambda as (element, index).
-        return F.array_min(
-            F.transform(F.col("__shs"), lambda s: F.xxhash64(s, F.lit(i)))
-        )
+        return F.array_min(F.transform(F.col("__shs"), lambda s: seeded(s, i)))
 
-    return docs.select(
-        F.col(id_col), char_shingles(text_col, shingle_n).alias("__shs")
-    ).select(
+    return elems.select(
         F.col(id_col),
         F.array(*[_seed_min(i) for i in range(num_hashes)]).alias("sig"),
-    )
-
-
-def minhash_signatures_md5(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 16,
-    shingle_n: int = 5,
-) -> DataFrame:
-    """(id, sig: array<bigint>) signatures on the engine-portable md5
-    Carter-Wegman family (`minhash_pairs_md5`'s hash, array-shaped like
-    `minhash_signatures`) — the oracle-reproducible signature tier for
-    consumers that store/join signature arrays (the incremental store).
-    Same map-only plan: one md5 per shingle, per-seed affine min."""
-    based = docs.select(
-        F.col(id_col), char_shingles(text_col, shingle_n).alias("__shs")
-    ).select(
-        F.col(id_col),
-        F.transform(
-            F.col("__shs"),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast(
-                "bigint"
-            ),
-        ).alias("__xs"),
-    )
-    coeffs = _minhash_coeffs(num_hashes)
-
-    def _seed_min(a: int, c: int) -> Column:
-        return F.array_min(
-            F.transform(
-                F.col("__xs"),
-                lambda x: (F.lit(a) * x + F.lit(c)) % F.lit(MINHASH_PRIME),
-            )
-        )
-
-    return based.select(
-        F.col(id_col),
-        F.array(
-            *[_seed_min(a, c) for a, c in coeffs]
-        ).alias("sig"),
     )
 
 
@@ -300,7 +335,7 @@ def lsh_bucket_occupancy(
     sf1 slope is shuffle constants or creeping bucket occupancy).
 
     One aggregation over the shared `_band_keys` construction (identical
-    keys to the production join). Returns one row per band:
+    keys to the production join). Returns one row per band, unordered:
     (band, n_buckets, max_occupancy, implied_pairs) — implied_pairs is the
     exact number of within-bucket candidate pairs the join for that band
     will enumerate before the distinct/verify stages.
@@ -309,16 +344,10 @@ def lsh_bucket_occupancy(
     per_bucket = banded.groupBy("band", "bh").agg(
         F.count(F.lit(1)).alias("c")
     )
-    return (
-        per_bucket.groupBy("band")
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.max("c").alias("max_occupancy"),
-            F.sum(
-                (F.col("c") * (F.col("c") - 1)) / F.lit(2)
-            ).cast("bigint").alias("implied_pairs"),
-        )
-        .orderBy("band")
+    return per_bucket.groupBy("band").agg(
+        F.count(F.lit(1)).alias("n_buckets"),
+        F.max("c").alias("max_occupancy"),
+        F.expr("sum(c * (c - 1) div 2)").alias("implied_pairs"),
     )
 
 
@@ -331,42 +360,29 @@ def minhash_dedup(
     shingle_n: int = 5,
     threshold: float = 0.8,
     max_bucket_occupancy: int | None = None,
+    hash: str = "xxhash64",
 ) -> DataFrame:
-    """Near-dup pairs with estimated Jaccard ≥ threshold.
+    """Near-dup pairs (id_a < id_b, est_jaccard) with estimated Jaccard ≥
+    threshold, on either `minhash_signatures` family (`hash`).
 
-    Estimated Jaccard = fraction of agreeing MinHash components (the standard
-    unbiased estimator), computed with `zip_with` on the two signatures —
-    no re-shingling of the texts in the verify step.
     `max_bucket_occupancy` passes through to the candidate stage: the
     mega-bucket guardrail for corpora whose duplicate-cluster sizes grow
     with the corpus (see minhash_lsh_candidates).
     """
-    rows = num_hashes // bands
     # The signature table feeds three consumers (banding + both sides of the
     # verify join). Persist it: signatures are num_hashes×8 bytes per doc —
     # at 100 TB corpus scale that's GBs, not TBs — and without the persist
-    # the shingle-explode + 32-way min agg (the expensive pass over the full
-    # corpus) runs three times.
-    sig = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_n).persist()
+    # the shingling + per-seed min pass over the full corpus runs three
+    # times.
+    sig = minhash_signatures(
+        docs, id_col, text_col, num_hashes, shingle_n, hash
+    ).persist()
     cand = minhash_lsh_candidates(
-        sig, id_col, bands, rows, max_bucket_occupancy=max_bucket_occupancy
+        sig, id_col, bands, num_hashes // bands,
+        max_bucket_occupancy=max_bucket_occupancy,
     )
-    sa = sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    scored = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "est_jaccard",
-            F.aggregate(
-                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                F.lit(0),
-                lambda acc, v: acc + v,
-            )
-            / F.lit(num_hashes),
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
+    scored = _verify_pairs(
+        cand, sig, sig, id_col, ("id_a", "id_b"), num_hashes, threshold
     )
     # Expose the persisted signature table so callers that consume the
     # pairs lazily (curation_pipeline's cached chain) can release it with
@@ -376,121 +392,61 @@ def minhash_dedup(
     return scored
 
 
-@F.pandas_udf(T.LongType())
-def _simhash64(tokens: pd.Series) -> pd.Series:
-    """64-bit SimHash of a token array — Arrow-batched, numpy inner loop.
-
-    Per-row map (no shuffle); the bit-count aggregation across tokens is the
-    one part of SimHash that built-in columnar functions can't express without
-    a 64-way explode, so it goes to numpy (SURVEY.md §2.9 pattern (b)).
-    """
-    import numpy as np
-
-    def one(toks) -> int:
-        if toks is None or len(toks) == 0:
-            return 0
-        # FNV-1a 64-bit per token, vectorized over the token list.
-        hs = np.zeros(len(toks), dtype=np.uint64)
-        for j, t in enumerate(toks):
-            h = np.uint64(0xCBF29CE484222325)
-            for ch in t.encode("utf-8"):
-                h = np.uint64((int(h) ^ ch) * 0x100000001B3 & 0xFFFFFFFFFFFFFFFF)
-            hs[j] = h
-        bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)).astype(
-            np.int64
-        )
-        v = np.where(bits.sum(axis=0) * 2 >= len(toks), np.uint64(1), np.uint64(0))
-        out = np.uint64(0)
-        for b in range(64):
-            out |= np.uint64(int(v[b]) << b)
-        return int(out.astype(np.int64))
-
-    return tokens.apply(one)
-
-
-def simhash(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, simhash: bigint) per document."""
-    return docs.select(
-        F.col(id_col), _simhash64(tokens_nonempty(text_col)).alias("simhash")
-    )
-
-
-def simhash_near_pairs(
-    docs: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
+def _verify_pairs(
+    cand: DataFrame,
+    sig_left: DataFrame,
+    sig_right: DataFrame,
+    id_col: str,
+    ids: tuple[str, str],
+    num_hashes: int,
+    threshold: float,
 ) -> DataFrame:
-    """Near-dup pairs whose SimHashes differ in ≤ max_hamming bits.
-
-    Candidate generation blocks on 16-bit quarters of the hash (pigeonhole:
-    any pair within Hamming ≤ 3 agrees on at least one of 4 quarters), so the
-    join is equi on (quarter_id, quarter_value) — no O(n²) scan.
-    """
-    # Both sides of the quarter join descend from this DF; persist so the
-    # pandas-UDF SimHash (the expensive full-corpus pass) runs once, not
-    # twice. 16 bytes per doc — negligible cache footprint at any scale.
-    sh = simhash(docs, id_col, text_col).persist()
-    # shiftright needs a literal bit count — build the 4 quarters explicitly.
-    quarters = F.array(
-        *[
-            F.struct(
-                F.lit(q).alias("q"),
-                F.shiftright(F.col("simhash"), q * 16)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("qv"),
-            )
-            for q in range(4)
-        ]
+    """Candidate pairs `ids` scored by the fraction of agreeing MinHash
+    components (the standard unbiased Jaccard estimator), computed with
+    `zip_with` on the two signatures — no re-shingling in the verify step.
+    The 6-dp round keeps the score engine-portable; k/16 and k/32 are
+    exact at 6 dp, so it changes no value at the widths in use."""
+    left, right = ids
+    sa = sig_left.select(F.col(id_col).alias(left), F.col("sig").alias("sig_a"))
+    sb = sig_right.select(F.col(id_col).alias(right), F.col("sig").alias("sig_b"))
+    agree = F.aggregate(
+        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, v: acc + v,
     )
-    quartered = sh.select(
-        id_col, "simhash", F.explode(quarters).alias("qq")
-    ).select(id_col, "simhash", "qq.q", "qq.qv")
-    a, b = quartered.alias("a"), quartered.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.q") == F.col("b.q"))
-            & (F.col("a.qv") == F.col("b.qv"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+    return (
+        cand.join(sa, left)
+        .join(sb, right)
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
+            left, right, F.round(agree / F.lit(num_hashes), 6).alias("est_jaccard")
         )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("est_jaccard") >= threshold)
     )
-    return pairs
 
 
-SIMHASH_MD5_BITS = 60  # fits the signed-bigint-safe 15-hex-char md5 hash
-
-
-def simhash_md5(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, simhash) on the engine-portable md5 token hash — every step a
-    built-in JVM expression (no UDF), so the hash is reproducible in any
-    engine: per token take the 60-bit md5 prefix, per bit position count
+def simhash(
+    docs: DataFrame, id_col: str, text_col: str, hash: str = "xxhash64"
+) -> DataFrame:
+    """(id, simhash: bigint) per document, every step a built-in JVM
+    expression: per token take its `hash` (xxhash64's 64 bits, or the
+    60-bit md5 prefix that DuckDB reproduces), per bit position count
     +1/-1 over tokens, set the bit where the count is ≥ 0.
 
-    Distributed form: explode (token → 60 bit rows) then two hash
-    aggregations — both partial/final map-side combinable, so the 60×
-    intermediate never leaves the executor unaggregated. `simhash`
-    (FNV/numpy) stays the production path; this is the correctness witness.
-    Docs with zero tokens produce no row (the oracle's unnest does the
-    same)."""
+    Distributed form: explode (token → one row per bit) then two hash
+    aggregations — both partial/final map-side combinable, so the 60–64×
+    intermediate never leaves the executor unaggregated. Docs with zero
+    tokens produce no row (the oracle's unnest does the same)."""
+    _check_hash(hash)
+    bits, _width = _SIMHASH_SHAPE[hash]
+    token_hash = F.xxhash64 if hash == "xxhash64" else _md5_hash64
     toks = docs.select(
         F.col(id_col), F.explode(tokens_nonempty(text_col)).alias("t")
     )
-    hashed = toks.select(id_col, _md5_hash64(F.col("t")).alias("h"))
-    bits = hashed.select(
-        id_col,
-        "h",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(SIMHASH_MD5_BITS - 1))
-        ).alias("b"),
+    hashed = toks.select(id_col, token_hash(F.col("t")).alias("h"))
+    exploded = hashed.select(
+        id_col, "h", F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("b")
     )
-    counts = bits.groupBy(id_col, "b").agg(
+    counts = exploded.groupBy(id_col, "b").agg(
         F.sum(
             F.when(F.expr("(shiftright(h, b) & 1) = 1"), 1).otherwise(-1)
         ).alias("c")
@@ -502,29 +458,59 @@ def simhash_md5(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def simhash_near_pairs_md5(
-    docs: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
-) -> DataFrame:
-    """`simhash_near_pairs` on the portable hash: 15-bit block keys
-    (pigeonhole over 4 blocks of the 60-bit hash covers Hamming ≤ 3),
-    equi-join on (block, value), exact Hamming verify via bit_count(xor).
-    Fully oracle-able — DuckDB reproduces every intermediate."""
-    sh = simhash_md5(docs, id_col, text_col).persist()
+def _simhash_blocks(sh: DataFrame, id_col: str, hash: str) -> DataFrame:
+    """(id, simhash, q, qv): one row per block q of each simhash, the
+    equi-join key of every SimHash candidate join."""
+    bits, width = _SIMHASH_SHAPE[hash]
     blocks = F.array(
         *[
             F.struct(
                 F.lit(q).alias("q"),
-                F.shiftright(F.col("simhash"), q * 15)
-                .bitwiseAND(F.lit(0x7FFF))
+                F.shiftright(F.col("simhash"), q * width)
+                .bitwiseAND(F.lit((1 << width) - 1))
                 .alias("qv"),
             )
-            for q in range(4)
+            for q in range(bits // width)
         ]
     )
-    blocked = sh.select(
+    return sh.select(
         id_col, "simhash", F.explode(blocks).alias("qq")
     ).select(id_col, "simhash", "qq.q", "qq.qv")
-    a, b = blocked.alias("a"), blocked.alias("b")
+
+
+def simhash_near_pairs(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    max_hamming: int = 3,
+    hash: str = "xxhash64",
+) -> DataFrame:
+    """Near-dup pairs whose SimHashes differ in ≤ max_hamming bits.
+
+    Candidate generation blocks on four blocks of the hash (16 bits for
+    xxhash64, 15 for md5; pigeonhole: any pair within Hamming ≤ 3 agrees
+    on at least one block), so the join is equi on (block, value) — no
+    O(n²) scan — and the exact Hamming verify is bit_count(xor).
+    """
+    # Both sides of the block join descend from this DF; persist so the
+    # simhash vote (the expensive full-corpus pass) runs once, not twice.
+    # 16 bytes per doc — negligible cache footprint at any scale.
+    sh = simhash(docs, id_col, text_col, hash).persist()
+    return _simhash_pairs(sh, sh, id_col, hash, ("id_a", "id_b"), max_hamming)
+
+
+def _simhash_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    id_col: str,
+    hash: str,
+    ids: tuple[str, str],
+    max_hamming: int,
+) -> DataFrame:
+    """(ids[0], ids[1], hamming) for every left/right simhash pair with
+    left id < right id that shares a block and is within max_hamming."""
+    a = _simhash_blocks(left, id_col, hash).alias("a")
+    b = _simhash_blocks(right, id_col, hash).alias("b")
     return (
         a.join(
             b,
@@ -533,8 +519,8 @@ def simhash_near_pairs_md5(
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col(f"a.{id_col}").alias(ids[0]),
+            F.col(f"b.{id_col}").alias(ids[1]),
             F.bit_count(
                 F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
             ).alias("hamming"),
@@ -542,170 +528,6 @@ def simhash_near_pairs_md5(
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-
-
-MINHASH_PRIME = (1 << 31) - 1  # Mersenne prime for the Carter-Wegman family
-
-
-def _minhash_coeffs(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
-    """Fixed (a_i, c_i) pairs for h_i(x) = (a_i*x + c_i) mod p, generated by
-    a tiny deterministic LCG so BOTH the Spark plan and the SQL oracle embed
-    the identical literals. a_i ∈ [1, p), c_i ∈ [0, p); with x < 2^32 and
-    a_i < 2^31, a_i*x + c_i < 2^63 — exact in signed-64 on every engine."""
-    state = seed
-    out = []
-    for _ in range(num_hashes):
-        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
-        a = state % (MINHASH_PRIME - 1) + 1
-        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
-        c = state % MINHASH_PRIME
-        out.append((a, c))
-    return out
-
-
-def _md5_hash64(col: Column) -> Column:
-    """Engine-portable 60-bit hash: first 15 hex chars of md5 as a bigint.
-    Exists so the MinHash pipeline can be verified bit-for-bit against a
-    DuckDB oracle (`('0x' || substr(md5(x),1,15))::BIGINT` produces the
-    identical value); xxhash64 stays the production hash (faster, no hex
-    round-trip) in `minhash_signatures`."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
-def minhash_banded_md5(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 5,
-    persist_sig: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """(signatures, band-keys) for the portable-md5 MinHash-LSH pipeline —
-    the shared front half of `minhash_pairs_md5`, exposed so diagnostics
-    (the band-occupancy report) ride the IDENTICAL construction the
-    candidate join uses. Returns (sig, banded): `sig` holds num_hashes
-    flat columns h0..hN (persisted by default — it feeds both verify-join
-    sides of the pairs query; pass persist_sig=False when only `banded`
-    is consumed, e.g. the occupancy report, so the full signature table
-    isn't cached for nothing), `banded` is (id, band, bh)."""
-    rows = num_hashes // bands
-    shingled = docs.select(
-        F.col(id_col), char_shingles(text_col, shingle_n).alias("__shs")
-    )
-    # Carter-Wegman universal family: ONE md5 per shingle yields a 32-bit
-    # base x (hex chars 1-8); seed i's hash is (a_i*x + c_i) mod p with
-    # p = 2^31-1 and fixed per-seed coefficients. The multiply wraps the
-    # modulus many times (unlike an additive family, whose components
-    # correlate and inflate the Jaccard estimate), every step is exact in
-    # signed-64 on both engines, and the corpus pass runs one digest per
-    # shingle instead of num_hashes (measured 14.3 s → ~2 s at sf0.1).
-    based = shingled.select(
-        F.col(id_col),
-        F.transform(
-            F.col("__shs"),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast(
-                "bigint"
-            ),
-        ).alias("__xs"),
-    )
-    coeffs = _minhash_coeffs(num_hashes)
-
-    def _seed_min(a: int, c: int) -> F.Column:
-        # Map-only per-doc min over the base-hash array (no explode, no
-        # groupBy — see minhash_signatures). One-parameter lambda required.
-        return F.array_min(
-            F.transform(
-                F.col("__xs"),
-                lambda x: (F.lit(a) * x + F.lit(c)) % F.lit(MINHASH_PRIME),
-            )
-        )
-
-    sig = based.select(
-        F.col(id_col),
-        *[
-            _seed_min(a, c).alias(f"h{i}")
-            for i, (a, c) in enumerate(coeffs)
-        ],
-    )
-    if persist_sig:
-        sig = sig.persist()
-    banded = sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _md5_hash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"h{b * rows + j}").cast("string")
-                                    for j in range(rows)
-                                ],
-                            )
-                        ).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bh")
-    return sig, banded
-
-
-def minhash_pairs_md5(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 5,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Fully-oracled MinHash-LSH near-dup pairs: same shingle → per-seed min
-    → band-bucket join → signature-agreement verify pipeline as
-    `minhash_dedup`, built on the portable md5 hash so every intermediate
-    (signatures, band keys, candidates, scores) is reproducible in ANSI SQL.
-
-    Signatures are held as `num_hashes` flat columns (h0..hN) rather than an
-    array — same physical plan, trivially expressible oracle.
-    """
-    sig, banded = minhash_banded_md5(
-        docs, id_col, text_col, num_hashes, bands, shingle_n
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    sa = sig.select(F.col(id_col).alias("id_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(num_hashes)])
-    sb = sig.select(F.col(id_col).alias("id_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(num_hashes)])
-    agree = sum(
-        (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(num_hashes)
-    )
-    out = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(agree / F.lit(num_hashes), 6).alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-    )
-    # Same contract as minhash_dedup: expose the persisted signature table
-    # so chained consumers (curation_pipeline's cached-frame ledger) can
-    # release it with their other intermediates.
-    out._crz_cached = sig
-    return out
 
 
 def _parse_byte_size(s: str, default_unit: int = 1) -> int:
@@ -1239,7 +1061,7 @@ def minhash_incremental(
     bands: int = 8,
     shingle_n: int = 5,
     threshold: float = 0.8,
-    signature_fn=None,
+    hash: str = "xxhash64",
 ) -> DataFrame:
     """Incremental near-dup maintenance — the daily-ingest form of
     `minhash_dedup`: signatures are computed for the NEW batch only
@@ -1274,43 +1096,25 @@ def minhash_incremental(
     ingest ids are monotonically increasing across batches (daily ingest's
     natural property) — the `other < new` direction filter relies on it.
     """
-    rows = num_hashes // bands
-
-    # signature_fn picks the hash family: xxhash64 (default, production)
-    # or minhash_signatures_md5 (engine-portable — lets a SQL oracle
-    # reproduce the store and the pair report exactly).
-    if signature_fn is None:
-        signature_fn = minhash_signatures
     # One store = one hash family, forever: a store built with xxhash64
     # signatures later fed md5 signatures would pass the id anti-join
     # silently and report meaningless est_jaccard values from
     # cross-family signature comparisons. The first batch records the
-    # family in a `_family` marker; every later batch must match.
+    # family in a `_family` marker; every later batch must match. The
+    # marker names are those of the per-family builders that wrote the
+    # stores before `hash=` existed, so existing stores still open.
+    _check_hash(hash)
+    family = {"xxhash64": "minhash_signatures", "md5": "minhash_signatures_md5"}
     _store_family_check(
-        spark,
-        store_path,
-        f"{getattr(signature_fn, '__name__', repr(signature_fn))}"
-        f":h{num_hashes}:n{shingle_n}",
+        spark, store_path, f"{family[hash]}:h{num_hashes}:n{shingle_n}"
     )
-    sig_new = signature_fn(
-        new_docs, id_col, text_col, num_hashes, shingle_n
+    sig_new = minhash_signatures(
+        new_docs, id_col, text_col, num_hashes, shingle_n, hash
     )
-    old_files = _store_list(spark, store_path)
-    if old_files:
-        sig_old = spark.read.parquet(*old_files)
-        to_append = sig_new.join(
-            sig_old.select(id_col), id_col, "left_anti"
-        )
-    else:
-        to_append = sig_new
-    _store_commit(spark, to_append, store_path)
-
-    all_files = _store_list(spark, store_path)
-    sig_all = spark.read.parquet(*all_files)
-    sig_batch = sig_all.join(
-        new_docs.select(id_col).distinct(), id_col, "left_semi"
+    sig_all, sig_batch = _store_append(
+        spark, sig_new, new_docs, id_col, store_path
     )
-
+    rows = num_hashes // bands
     cand = (
         _band_keys(sig_batch, id_col, bands, rows, out_id="id_new")
         .join(
@@ -1321,27 +1125,28 @@ def minhash_incremental(
         .select("id_new", "id_other")
         .distinct()
     )
-    sa = sig_batch.select(
-        F.col(id_col).alias("id_new"), F.col("sig").alias("sig_a")
+    return _verify_pairs(
+        cand, sig_batch, sig_all, id_col, ("id_new", "id_other"),
+        num_hashes, threshold,
     )
-    sb = sig_all.select(
-        F.col(id_col).alias("id_other"), F.col("sig").alias("sig_b")
-    )
-    return (
-        cand.join(sa, "id_new")
-        .join(sb, "id_other")
-        .withColumn(
-            "est_jaccard",
-            F.aggregate(
-                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                F.lit(0),
-                lambda acc, v: acc + v,
-            )
-            / F.lit(num_hashes),
+
+
+def _store_append(
+    spark, rows: DataFrame, new_docs: DataFrame, id_col: str, store_path: str
+) -> tuple[DataFrame, DataFrame]:
+    """Commit the batch's per-document `rows` to an incremental store,
+    skipping ids already stored (idempotent re-runs), and return
+    (store ∪ batch, the batch's stored rows) read back from the committed
+    files."""
+    old_files = _store_list(spark, store_path)
+    if old_files:
+        rows = rows.join(
+            spark.read.parquet(*old_files).select(id_col), id_col, "left_anti"
         )
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_new", "id_other", "est_jaccard")
-    )
+    _store_commit(spark, rows, store_path)
+    stored = spark.read.parquet(*_store_list(spark, store_path))
+    batch = stored.join(new_docs.select(id_col).distinct(), id_col, "left_semi")
+    return stored, batch
 
 
 def _store_list(spark, store_path: str) -> list[str]:
@@ -1384,7 +1189,7 @@ def _store_family_check(spark, store_path: str, family: str) -> None:
                 f"signature store at {store_path} was built with family "
                 f"{existing!r}; this batch supplies {family!r}. Mixing "
                 f"families makes est_jaccard meaningless — use a new "
-                f"store path or the original signature_fn/params."
+                f"store path or the original hash/params."
             )
     else:
         out = fs.create(marker, True)
@@ -1447,54 +1252,15 @@ def simhash_incremental(
     Returns (id_new, id_other, hamming): `id_new` from this batch,
     `id_other` any earlier-stored or same-batch lower-id document.
     """
+    # Marker pinned to the pre-`hash=` name so existing stores still open.
     _store_family_check(spark, store_path, "simhash_md5:60")
-    sh_new = simhash_md5(new_docs, id_col, text_col)
-    old_files = _store_list(spark, store_path)
-    if old_files:
-        sh_old = spark.read.parquet(*old_files)
-        to_append = sh_new.join(sh_old.select(id_col), id_col, "left_anti")
-    else:
-        to_append = sh_new
-    _store_commit(spark, to_append, store_path)
-
-    sh_all = spark.read.parquet(*_store_list(spark, store_path))
-    sh_batch = sh_all.join(
-        new_docs.select(id_col).distinct(), id_col, "left_semi"
+    sh_all, sh_batch = _store_append(
+        spark, simhash(new_docs, id_col, text_col, "md5"), new_docs, id_col,
+        store_path,
     )
-
-    def _blocked(df: DataFrame, out_id: str) -> DataFrame:
-        blocks = F.array(
-            *[
-                F.struct(
-                    F.lit(q).alias("q"),
-                    F.shiftright(F.col("simhash"), q * 15)
-                    .bitwiseAND(F.lit(0x7FFF))
-                    .alias("qv"),
-                )
-                for q in range(4)
-            ]
-        )
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.col("simhash").alias(f"sh_{out_id}"),
-            F.explode(blocks).alias("qq"),
-        ).select(out_id, f"sh_{out_id}", "qq.q", "qq.qv")
-
-    a = _blocked(sh_batch, "id_new")
-    b = _blocked(sh_all, "id_other")
-    return (
-        a.join(b, ["q", "qv"])
-        .filter(F.col("id_other") < F.col("id_new"))
-        .select(
-            "id_new",
-            "id_other",
-            F.bit_count(
-                F.col("sh_id_new").bitwiseXOR(F.col("sh_id_other"))
-            ).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _simhash_pairs(
+        sh_all, sh_batch, id_col, "md5", ("id_other", "id_new"), max_hamming
+    ).select("id_new", "id_other", "hamming")
 
 
 # ---------------------------------------------------------------------------

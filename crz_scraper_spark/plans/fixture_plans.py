@@ -296,10 +296,10 @@ FROM part WHERE p_partkey < 500
 # driver-checked query: documents split into two ingest batches (even ids =
 # day 1, odd = day 2), day 1 ingested into a persisted signature store, day
 # 2's report returned. Signatures use the engine-portable md5 Carter-Wegman
-# family, so the oracle reproduces the ENTIRE path — signatures, band
-# buckets, candidate join, agreement scores — from the raw table: the
-# day-2 report must equal the full-corpus pair set restricted to odd
-# id_new. Repeat invocations re-run the day-2 call against the existing
+# family (hash="md5"), so the oracle reproduces the ENTIRE path —
+# signatures, band buckets, candidate join, agreement scores — from the
+# raw table: the day-2 report must equal the full-corpus pair set
+# restricted to odd id_new. Repeat invocations re-run the day-2 call against the existing
 # store (idempotent append — the maintenance property under test).
 # ---------------------------------------------------------------------------
 
@@ -310,10 +310,7 @@ _MHI_THRESHOLD = 0.5
 
 
 def minhash_incremental_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crz_scraper_spark.operators.dedup import (
-        minhash_incremental,
-        minhash_signatures_md5,
-    )
+    from crz_scraper_spark.operators.dedup import minhash_incremental
 
     store = _fixture_dir("mhinc", sf_dir)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
@@ -322,7 +319,7 @@ def minhash_incremental_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=_MHI_BANDS,
         shingle_n=_MHI_SHINGLE,
         threshold=_MHI_THRESHOLD,
-        signature_fn=minhash_signatures_md5,
+        hash="md5",
     )
     if store not in _BUILT:
         _sh.rmtree(store, ignore_errors=True)
@@ -332,10 +329,7 @@ def minhash_incremental_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).count()  # materialize day-1 ingest (report discarded)
         _BUILT.add(store)
     day2 = docs.filter(F.col("doc_id") % 2 == 1)
-    report = minhash_incremental(spark, day2, "doc_id", "text", store, **kw)
-    return report.select(
-        "id_new", "id_other", F.round("est_jaccard", 6).alias("est_jaccard")
-    )
+    return minhash_incremental(spark, day2, "doc_id", "text", store, **kw)
 
 
 def _minhash_incremental_sql() -> str:
@@ -662,7 +656,7 @@ def curation_pipeline_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # curation_pipeline_audit_md5 — the SAME end-to-end curation chain on the
 # engine-portable md5 tier (md5 content digest for exact dedup, the
-# minhash_pairs_md5 LSH family for near-dup), so the ENTIRE nightly chain —
+# hash="md5" MinHash-LSH family for near-dup), so the ENTIRE nightly chain —
 # exact dedup → LSH pairs → connected components → quality floor → split —
 # has one composed ANSI-SQL oracle: the md5-pairs CTEs chain into the
 # recursive-CTE closure and the doc_quality score formula, and the five-row

@@ -19,12 +19,13 @@ from pyspark.sql import functions as F
 from crz_scraper_spark.catalog import fan_out, load_table, pin
 from crz_scraper_spark.functions.text import WORD_SEPARATOR_RE, tokens_nonempty
 from crz_scraper_spark.operators.dedup import (
+    _band_keys,
     fixed_centroids,
+    lsh_bucket_occupancy,
     minhash_dedup,
-    minhash_pairs_md5,
+    minhash_signatures,
     semantic_dedup,
     simhash_near_pairs,
-    simhash_near_pairs_md5,
 )
 from crz_scraper_spark.operators.extraction import (
     detect_tables,
@@ -586,7 +587,9 @@ WHERE h.corpus_recall_ppm >= h.floor_ppm
 
 # ---------------------------------------------------------------------------
 # minhash_near_dup / simhash_near_dup — LSH near-duplicate candidate+verify
-# pipelines (operators/dedup.py). xxhash64-based → rows-only checks.
+# pipelines (operators/dedup.py) on the production xxhash64 family →
+# rows-only checks. Their `*_md5` twins below run the same pipelines with
+# hash="md5" and are oracled.
 # ---------------------------------------------------------------------------
 
 
@@ -638,11 +641,11 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# simhash_near_dup_md5 — the SAME block→equi-join→hamming-verify pipeline on
-# the engine-portable md5 token hash, every step a built-in expression:
-# signatures, block keys, candidate pairs, and Hamming distances all
-# hash-match the DuckDB oracle. xxhash64/FNV (`simhash_near_dup`) stays the
-# production hash; this is the structural correctness witness.
+# simhash_near_dup_md5 — `simhash_near_pairs` with hash="md5": the SAME
+# vote→block→equi-join→hamming-verify pipeline as `simhash_near_dup`, on the
+# engine-portable md5 token hash (60 bits, 15-bit blocks): signatures, block
+# keys, candidate pairs, and Hamming distances all hash-match the DuckDB
+# oracle. xxhash64 (`simhash_near_dup`) stays the production hash.
 # ---------------------------------------------------------------------------
 
 _SH_MAX_HAMMING = 3
@@ -650,8 +653,8 @@ _SH_MAX_HAMMING = 3
 
 def simhash_near_dup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return simhash_near_pairs_md5(
-        docs, "doc_id", "text", max_hamming=_SH_MAX_HAMMING
+    return simhash_near_pairs(
+        docs, "doc_id", "text", max_hamming=_SH_MAX_HAMMING, hash="md5"
     )
 
 
@@ -689,12 +692,14 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {_SH_MAX_HAMMING}
 
 
 # ---------------------------------------------------------------------------
-# minhash_near_dup_md5 — the SAME shingle→minhash→band→bucket-join pipeline
-# on the engine-portable md5 hash, so the ENTIRE LSH path (signatures, band
-# keys, candidate set, agreement scores) hash-matches a DuckDB oracle
-# generated from the same constants. xxhash64 (`minhash_near_dup`) stays the
-# production hash; this query is the correctness witness for the pipeline
-# structure itself.
+# minhash_near_dup_md5 — `minhash_dedup` with hash="md5": the SAME
+# shingle→minhash→band→bucket-join→verify pipeline as `minhash_near_dup`, on
+# the engine-portable md5 signature family, so the LSH path (signatures,
+# candidate set, agreement scores) hash-matches a DuckDB oracle generated
+# from the same constants. The engine hashes each band slice with xxhash64
+# (the shared `_band_keys`); the oracle hashes the same slice values with
+# md5. Both only group equal slices, so the buckets — and every reported
+# row — agree. xxhash64 (`minhash_near_dup`) stays the production family.
 # ---------------------------------------------------------------------------
 
 _MH_HASHES = 16
@@ -705,7 +710,7 @@ _MH_THRESHOLD = 0.5
 
 def minhash_near_dup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return minhash_pairs_md5(
+    return minhash_dedup(
         docs,
         "doc_id",
         "text",
@@ -713,13 +718,14 @@ def minhash_near_dup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=_MH_BANDS,
         shingle_n=_MH_SHINGLE,
         threshold=_MH_THRESHOLD,
+        hash="md5",
     )
 
 
 def _minhash_md5_sql(
     src: str = "documents", threshold: float = _MH_THRESHOLD
 ) -> str:
-    """DuckDB analog of `minhash_pairs_md5` over the table/CTE `src`.
+    """DuckDB analog of `minhash_dedup(hash="md5")` over the table/CTE `src`.
     Callers that re-head this string (`_lsh_band_occupancy_md5_sql`,
     `_near_dup_clusters_sql`, the curation-audit oracle) split on the CTE
     markers below — keep the layout stable."""
@@ -780,27 +786,19 @@ WHERE round(({agree}) / {nh}.0, 6) >= {threshold}
 # pairs sum c·(c−1)/2 the bucket join will enumerate. Round-4 measured 10×
 # docs ⇒ ~96× implied pairs on this corpus (duplicate-cluster size grows
 # with the corpus) — this query makes that scale-health metric part of the
-# driver-verified surface, riding the IDENTICAL `minhash_banded_md5`
-# construction the candidate join uses (shared code, not a re-derivation).
+# driver-verified surface: `lsh_bucket_occupancy` over the md5 signatures,
+# riding the IDENTICAL `_band_keys` construction the candidate join uses
+# (shared code, not a re-derivation).
 # ---------------------------------------------------------------------------
 
 
 def lsh_band_occupancy_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crz_scraper_spark.operators.dedup import minhash_banded_md5
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # Only the band keys are consumed here — skip the signature persist
-    # the pairs query needs (it would cache the full h0..hN table for
-    # nothing and hold it until clearCache).
-    _sig, banded = minhash_banded_md5(
-        docs, "doc_id", "text", _MH_HASHES, _MH_BANDS, _MH_SHINGLE,
-        persist_sig=False,
+    sig = minhash_signatures(
+        docs, "doc_id", "text", _MH_HASHES, _MH_SHINGLE, hash="md5"
     )
-    per = banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("c"))
-    return per.groupBy("band").agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.max("c").alias("max_occupancy"),
-        F.expr("sum(c * (c - 1) div 2)").alias("implied_pairs"),
+    return lsh_bucket_occupancy(
+        sig, "doc_id", _MH_BANDS, _MH_HASHES // _MH_BANDS
     )
 
 
@@ -1498,15 +1496,16 @@ GROUP BY 1
 # fuzzy_name_pairs_banded — the LSH tier of the fuzzy family, i.e. the form
 # that actually survives 100 TB: candidates come from a MinHash band-bucket
 # equi-join over character-3-gram shingles of the name (the IDENTICAL
-# portable-md5 construction minhash_near_dup_md5 uses, via
-# minhash_banded_md5), then the exact levenshtein(≤2) verify runs only on
+# portable-md5 signatures and `_band_keys` that minhash_near_dup_md5 uses),
+# then the exact levenshtein(≤2) verify runs only on
 # bucket-collision pairs. Both hand-picked blocking keys above bound pair
 # work by a DATA property (brand / first-token frequency) that grows with
 # the corpus; the LSH bucket key is governed by signature diversity
 # instead. Recall tier: a true pair is found iff it agrees on ≥1 of 4
 # bands (names within edit distance 2 share almost all 3-grams, so
 # per-band agreement ≈ jaccard⁴ per 4-hash band — high recall on
-# lev ≤ 2 name pairs), and because every hash is md5-derived the WHOLE
+# lev ≤ 2 name pairs), and because every signature hash is md5-derived
+# (band buckets only group equal slices, whatever hashes them) the WHOLE
 # construction is reproducible in DuckDB: this recall tier is fully
 # ORACLED, not a rows-only claim. The bucket key is (brand, band, bh):
 # brand is required of every reported pair anyway, so folding it into
@@ -1522,8 +1521,6 @@ _FNB_SHINGLE = 3
 
 
 def fuzzy_name_pairs_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crz_scraper_spark.operators.dedup import minhash_banded_md5
-
     p = fan_out(load_table(spark, sf_dir, "part")).select(
         "p_partkey", "p_name", "p_brand"
     )
@@ -1548,14 +1545,11 @@ def fuzzy_name_pairs_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     names = g.select(
         F.col("gid").alias("doc_id"), F.col("p_name").alias("text")
     )
-    _sig, banded = minhash_banded_md5(
-        names,
-        "doc_id",
-        "text",
-        _FNB_HASHES,
-        _FNB_BANDS,
-        _FNB_SHINGLE,
-        persist_sig=False,
+    sig = minhash_signatures(
+        names, "doc_id", "text", _FNB_HASHES, _FNB_SHINGLE, hash="md5"
+    )
+    banded = _band_keys(
+        sig, "doc_id", _FNB_BANDS, _FNB_HASHES // _FNB_BANDS, out_id="doc_id"
     )
     keyed = banded.join(
         g.select(

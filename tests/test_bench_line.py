@@ -6,9 +6,10 @@ driver's stdout capture truncated the line in r1 and r9, making
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 
@@ -129,3 +130,25 @@ def test_parsed_line_matches_driver_contract_keys():
     assert isinstance(parsed["value"], float)
     assert isinstance(parsed["sf"], float)
     assert all(isinstance(v, (int, float)) for v in parsed["queries"].values())
+
+
+def test_shared_with_prev_picks_newest_artifact_on_same_core_count(tmp_path):
+    """The comparison artifact is the highest-numbered BENCH_r* recorded on
+    this run's core count: a newer 8-core file (which also sorts last by
+    name) must not be compared against a 32-core run, and round 9 must not
+    outrank round 11 by name order."""
+
+    def write(name, cpus, queries):
+        rec = {"n": 0, "rc": 0, "cpus": cpus, "parsed": {"queries": queries}}
+        (tmp_path / name).write_text(json.dumps(rec))
+
+    write("BENCH_r9.json", 32, {"a": 1.0})
+    write("BENCH_r11.json", 32, {"a": 1.0, "b": 1.0})
+    write("BENCH_r12_c8.json", 8, {"c": 1.0})
+    timings = {"a": 2.0, "b": 3.0, "c": 4.0}
+
+    got = bench._shared_with_prev(timings, 32, root=str(tmp_path))
+    assert got == {"seconds": 5.0, "n": 2, "file": "BENCH_r11.json"}
+    got = bench._shared_with_prev(timings, 8, root=str(tmp_path))
+    assert got == {"seconds": 4.0, "n": 1, "file": "BENCH_r12_c8.json"}
+    assert bench._shared_with_prev(timings, 4, root=str(tmp_path)) is None

@@ -148,7 +148,8 @@ def test_char_shingles(spark):
     assert got == ["abc", "bcd", "cde"]
 
 
-def test_minhash_finds_exact_duplicates(spark):
+@pytest.mark.parametrize("hash", ["xxhash64", "md5"])
+def test_minhash_finds_exact_duplicates(spark, hash):
     base = "the quick brown fox jumps over the lazy dog " * 10
     rows = [
         Row(doc_id=1, text=base),
@@ -159,17 +160,34 @@ def test_minhash_finds_exact_duplicates(spark):
     df = spark.createDataFrame(rows)
     pairs = {
         (r["id_a"], r["id_b"]): r["est_jaccard"]
-        for r in minhash_dedup(df, "doc_id", "text", threshold=0.5).collect()
+        for r in minhash_dedup(
+            df, "doc_id", "text", threshold=0.5, hash=hash
+        ).collect()
     }
     assert (1, 2) in pairs and pairs[(1, 2)] == 1.0
     assert all(4 not in p for p in pairs)
 
 
-def test_simhash_identical_docs_equal(spark):
+@pytest.mark.parametrize("hash", ["xxhash64", "md5"])
+def test_simhash_identical_docs_equal(spark, hash):
     rows = [Row(doc_id=1, text="alpha beta gamma"), Row(doc_id=2, text="alpha beta gamma")]
     df = spark.createDataFrame(rows)
-    hashes = [r["simhash"] for r in simhash(df, "doc_id", "text").collect()]
-    assert hashes[0] == hashes[1]
+    hashes = [r["simhash"] for r in simhash(df, "doc_id", "text", hash).collect()]
+    assert len(hashes) == 2 and hashes[0] == hashes[1]
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda df: simhash(df, "doc_id", "text", hash="fnv"),
+        lambda df: minhash_dedup(df, "doc_id", "text", hash="MD5"),
+    ],
+)
+def test_unknown_hash_family_raises(spark, build):
+    """A misspelled family must fail loudly, not run the other family."""
+    df = spark.createDataFrame([Row(doc_id=1, text="alpha beta gamma")])
+    with pytest.raises(ValueError, match="hash must be one of"):
+        build(df)
 
 
 def test_cosine_known_value(spark):

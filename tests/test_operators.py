@@ -963,7 +963,8 @@ def test_ivf_incremental_idempotent_store_and_report(spark, tmp_path):
     assert stored3.count() == n_after_first
 
 
-def test_lsh_bucket_occupancy_and_mega_bucket_cap(spark):
+@pytest.mark.parametrize("hash", ["xxhash64", "md5"])
+def test_lsh_bucket_occupancy_and_mega_bucket_cap(spark, hash):
     """The occupancy audit reports exact per-band bucket stats (implied
     pairs = sum c(c-1)/2 — the quantity behind the banded join's cost
     model), and the max_bucket_occupancy guardrail excludes mega-bucket
@@ -984,7 +985,7 @@ def test_lsh_bucket_occupancy_and_mega_bucket_cap(spark):
     rows += [(10, pair), (11, pair + "tail"), (20, "unique text " * 12)]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
 
-    sig = minhash_signatures(docs, "doc_id", "text", 32, 5)
+    sig = minhash_signatures(docs, "doc_id", "text", 32, 5, hash)
     occ = lsh_bucket_occupancy(sig, "doc_id", 8, 4).collect()
     assert len(occ) == 8
     for r in occ:
@@ -996,11 +997,11 @@ def test_lsh_bucket_occupancy_and_mega_bucket_cap(spark):
 
     uncapped = minhash_dedup(
         docs, "doc_id", "text", num_hashes=32, bands=8, shingle_n=5,
-        threshold=0.5,
+        threshold=0.5, hash=hash,
     )
     capped = minhash_dedup(
         docs, "doc_id", "text", num_hashes=32, bands=8, shingle_n=5,
-        threshold=0.5, max_bucket_occupancy=4,
+        threshold=0.5, max_bucket_occupancy=4, hash=hash,
     )
     un = {(r["id_a"], r["id_b"]) for r in uncapped.collect()}
     cap = {(r["id_a"], r["id_b"]) for r in capped.collect()}
@@ -1013,19 +1014,24 @@ def test_lsh_bucket_occupancy_and_mega_bucket_cap(spark):
 def test_incremental_store_rejects_mixed_hash_families(spark, tmp_path):
     """A signature store is permanently bound to the hash family (and
     signature-shaping params) of its first batch: feeding a different
-    signature_fn, num_hashes, or a simhash batch into a minhash store
+    hash family, num_hashes, or a simhash batch into a minhash store
     raises instead of silently producing cross-family est_jaccard noise.
     The `_family` marker rides the store dir (underscore-prefixed, so
-    parquet listings never see it)."""
+    parquet listings never see it). Its strings are pinned: stores written
+    by earlier versions carry them, and must still open."""
     import os
 
     import pytest as _pytest
 
     from crz_scraper_spark.operators.dedup import (
         minhash_incremental,
-        minhash_signatures_md5,
         simhash_incremental,
     )
+
+    def marker(path):
+        # Hadoop's FSDataOutputStream.writeUTF: 2-byte length, then bytes.
+        with open(os.path.join(path, "_family"), "rb") as fh:
+            return fh.read()[2:].decode()
 
     store = str(tmp_path / "famstore")
     day1 = spark.createDataFrame(
@@ -1034,17 +1040,17 @@ def test_incremental_store_rejects_mixed_hash_families(spark, tmp_path):
         "doc_id bigint, text string",
     )
     minhash_incremental(spark, day1, "doc_id", "text", store).collect()
-    assert os.path.exists(os.path.join(store, "_family"))
+    assert marker(store) == "minhash_signatures:h32:n5"
     day2 = spark.createDataFrame(
         [(3, "novel text for the second day entirely")],
         "doc_id bigint, text string",
     )
+    # An unknown family is refused before the store is touched.
+    with _pytest.raises(ValueError, match="hash must be one of"):
+        minhash_incremental(spark, day2, "doc_id", "text", store, hash="sha1")
     # Different hash family on the same store: refused.
     with _pytest.raises(ValueError, match="family"):
-        minhash_incremental(
-            spark, day2, "doc_id", "text", store,
-            signature_fn=minhash_signatures_md5,
-        )
+        minhash_incremental(spark, day2, "doc_id", "text", store, hash="md5")
     # Different signature width on the same store: refused.
     with _pytest.raises(ValueError, match="family"):
         minhash_incremental(spark, day2, "doc_id", "text", store, num_hashes=64)
@@ -1056,6 +1062,16 @@ def test_incremental_store_rejects_mixed_hash_families(spark, tmp_path):
     minhash_incremental(spark, day2, "doc_id", "text", store).collect()
     committed = [d for d in os.listdir(store) if d.startswith("batch-")]
     assert len(committed) == 2
+    # The other two markers, on fresh stores.
+    md5_store = str(tmp_path / "md5store")
+    minhash_incremental(
+        spark, day1, "doc_id", "text", md5_store, num_hashes=16, bands=4,
+        hash="md5",
+    ).collect()
+    assert marker(md5_store) == "minhash_signatures_md5:h16:n5"
+    sh_store = str(tmp_path / "shstore")
+    simhash_incremental(spark, day1, "doc_id", "text", sh_store).collect()
+    assert marker(sh_store) == "simhash_md5:60"
 
 
 def test_minhash_incremental_ignores_uncommitted_staging(spark, tmp_path):

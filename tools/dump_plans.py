@@ -6,9 +6,10 @@ Usage: python tools/dump_plans.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from crz_scraper_spark.plans.registry import REGISTRY  # noqa: E402
 from crz_scraper_spark.session import get_spark  # noqa: E402
@@ -39,7 +40,7 @@ SHOWCASE = [
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     names = sys.argv[2:] or SHOWCASE
-    spark = get_spark("dump_plans", cpus=8)
+    spark = get_spark("dump_plans")
     for n in names:
         fn, _ = REGISTRY[n]
         print(f"\n{'=' * 70}\n{n}\n{'=' * 70}")
